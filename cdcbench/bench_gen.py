@@ -3,11 +3,13 @@
 Everything a run feeds the engine is written here, before timing starts,
 from one ``numpy`` generator seeded by ``--seed``; the same seed and
 sizes give byte-identical files. The engine only ever sees these files.
+A run calls it as a child process, so the generator's memory never
+counts in the driver's peak RSS:
+
+    python3 cdcbench/bench_gen.py <root> <workload> <seed> '<sizes as JSON>'
 
 Per workload:
 
-- ``query_mix``: TPC-H-shaped tables plus ``events``, ``documents`` and
-  ``embeddings`` (the schemas of the plan registry's inputs) as parquet.
 - ``nosql_upsert``: a base ``orders`` snapshot (parquet), then DynamoDB
   stream records (NDJSON, wire-typed ``Keys``/``NewImage``), one file per
   micro-batch, with Zipf-skewed keys: ~10% INSERT of new keys, ~5%
@@ -27,36 +29,14 @@ from __future__ import annotations
 
 import json
 import os
+import sys
 
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
 
-# base row counts at scale factor 1 (TPC-H proportions; the side tables
-# follow the registry's test data)
-BASE_ROWS = {
-    "customer": 150_000,
-    "supplier": 10_000,
-    "part": 200_000,
-    "orders": 1_500_000,
-    "lineitem": 6_000_000,
-    "events": 1_000_000,
-    "documents": 50_000,
-    "embeddings": 20_000,
-}
-SEGMENTS = ["AUTOMOBILE", "BUILDING", "FURNITURE", "HOUSEHOLD", "MACHINERY"]
 PRIORITIES = ["1-URGENT", "2-HIGH", "3-MEDIUM", "4-NOT SPECIFIED", "5-LOW"]
-REGIONS = ["AFRICA", "AMERICA", "ASIA", "EUROPE", "MIDDLE EAST"]
-EVENT_TYPES = ["click", "error", "purchase", "signup", "view"]
-LANGS = ["en", "en", "en", "de", "es", "fr", "zh"]
-WORDS = (
-    "a the agg batch big column customer data fast filter group hash join "
-    "key line merge order part query row scan slow small sort spark stream "
-    "table value vector window"
-).split()
-PART_ADJ = ["blue", "cold", "hot", "large", "new", "old", "red", "small"]
-PART_NOUN = ["bolt", "gear", "gizmo", "ring", "widget"]
 MONTHS = "Jan Feb Mar Apr May Jun Jul Aug Sep Oct Nov Dec".split()
 DAY0 = np.datetime64("1995-01-01")
 N_DAYS = 2400
@@ -74,10 +54,6 @@ TXN_HEADER = (
     "LINE ID,OP,SEQ,ORDER KEY,SUPP KEY,QUANTITY, EXTENDED PRICE ,"
     "SHIP DATE,RETURN FLAG"
 )
-
-
-def rows_at(sf: float, table: str) -> int:
-    return max(1, int(BASE_ROWS[table] * sf))
 
 
 def _money(cents: int) -> str:
@@ -102,86 +78,8 @@ def _write(table: pa.Table, path: str) -> None:
 
 
 # ---------------------------------------------------------------------------
-# analytics tables (query_mix)
+# CDC change streams
 # ---------------------------------------------------------------------------
-def write_tables(rng: np.random.Generator, out: str, sf: float) -> None:
-    """The registry's ten input tables at ``sf`` under ``out``."""
-    os.makedirs(out, exist_ok=True)
-    n = {t: rows_at(sf, t) for t in BASE_ROWS}
-    _write(pa.table({
-        "r_regionkey": pa.array(range(5), pa.int32()),
-        "r_name": REGIONS,
-    }), f"{out}/region.parquet")
-    _write(pa.table({
-        "n_nationkey": pa.array(range(25), pa.int32()),
-        "n_name": [f"NATION_{i}" for i in range(25)],
-        "n_regionkey": pa.array([i % 5 for i in range(25)], pa.int32()),
-    }), f"{out}/nation.parquet")
-    _write(pa.table({
-        "c_custkey": np.arange(n["customer"], dtype=np.int64),
-        "c_name": [f"Customer#{i:09d}" for i in range(n["customer"])],
-        "c_nationkey": rng.integers(0, 25, n["customer"]).astype(np.int32),
-        "c_acctbal": rng.integers(-99_999, 999_999, n["customer"]) / 100,
-        "c_mktsegment": np.array(SEGMENTS)[rng.integers(0, 5, n["customer"])],
-    }), f"{out}/customer.parquet")
-    _write(pa.table({
-        "s_suppkey": np.arange(n["supplier"], dtype=np.int64),
-        "s_name": [f"Supplier#{i:09d}" for i in range(n["supplier"])],
-        "s_nationkey": rng.integers(0, 25, n["supplier"]).astype(np.int32),
-        "s_acctbal": rng.integers(-99_999, 999_999, n["supplier"]) / 100,
-    }), f"{out}/supplier.parquet")
-    adj = np.array(PART_ADJ)[rng.integers(0, len(PART_ADJ), n["part"])]
-    noun = np.array(PART_NOUN)[rng.integers(0, len(PART_NOUN), n["part"])]
-    _write(pa.table({
-        "p_partkey": np.arange(n["part"], dtype=np.int64),
-        "p_name": np.char.add(np.char.add(adj, " "), noun),
-        "p_brand": [f"Brand#{b}" for b in rng.integers(1, 30, n["part"])],
-        "p_type": np.array(["ECONOMY", "LARGE", "MEDIUM", "PROMO", "SMALL",
-                            "STANDARD"])[rng.integers(0, 6, n["part"])],
-        "p_size": rng.integers(1, 51, n["part"]).astype(np.int32),
-        "p_retailprice": (90_000 + np.arange(n["part"]) % 20_000) / 100,
-    }), f"{out}/part.parquet")
-    _write(orders_table(rng, n["orders"], n["customer"]), f"{out}/orders.parquet")
-    li = lineitem_arrays(rng, n["lineitem"], n["orders"], n["part"], n["supplier"])
-    _write(pa.table({
-        "l_orderkey": li["l_orderkey"],
-        "l_partkey": li["l_partkey"],
-        "l_suppkey": li["l_suppkey"],
-        "l_linenumber": li["l_linenumber"],
-        "l_quantity": li["l_quantity"].astype(np.float64),
-        "l_extendedprice": li["l_extendedprice_cents"] / 100,
-        "l_discount": rng.integers(0, 11, n["lineitem"]) / 100,
-        "l_tax": rng.integers(0, 9, n["lineitem"]) / 100,
-        "l_returnflag": li["l_returnflag"],
-        "l_linestatus": np.array(["F", "O"])[rng.integers(0, 2, n["lineitem"])],
-        "l_shipdate": pa.array(
-            (DAY0 + li["l_shipday"].astype("timedelta64[D]")).astype("datetime64[us]")
-        ),
-    }), f"{out}/lineitem.parquet")
-    ne = n["events"]
-    ts0 = np.datetime64("2024-01-01T00:00:00", "us")
-    _write(pa.table({
-        "event_id": np.arange(ne, dtype=np.int64),
-        "ts": pa.array(ts0 + np.sort(rng.integers(0, 30 * 86_400_000_000, ne))
-                       .astype("timedelta64[us]")),
-        "user_id": rng.integers(0, max(10, ne // 60), ne).astype(np.int64),
-        "event_type": np.array(EVENT_TYPES)[rng.integers(0, 5, ne)],
-        "value": rng.integers(0, 5000, ne) / 100,
-        "props": [f'{{"k": {k}}}' for k in rng.integers(0, 100, ne)],
-    }), f"{out}/events.parquet")
-    _write(documents_table(rng, n["documents"]), f"{out}/documents.parquet")
-    ne = n["embeddings"]
-    centers = rng.standard_normal((10, 64))
-    label = rng.integers(0, 10, ne)
-    vec = centers[label] + 0.6 * rng.standard_normal((ne, 64))
-    vec = (vec / np.linalg.norm(vec, axis=1, keepdims=True)).astype(np.float32)
-    _write(pa.table({
-        "vec_id": np.arange(ne, dtype=np.int64),
-        "embedding": pa.array(list(vec), pa.list_(pa.float32())),
-        "label": label.astype(np.int32),
-    }), f"{out}/embeddings.parquet")
-
-
 def orders_table(rng, n: int, n_cust: int) -> pa.Table:
     return pa.table({
         "o_orderkey": np.arange(n, dtype=np.int64),
@@ -210,34 +108,6 @@ def lineitem_arrays(rng, n: int, n_orders: int, n_part: int, n_supp: int) -> dic
     }
 
 
-def documents_table(rng, n: int) -> pa.Table:
-    """Documents over a small vocabulary; ~15% are light edits of an
-    earlier original, so the dedup queries have real near-duplicates
-    (edits of edits would chain clusters into long paths)."""
-    words = np.array(WORDS)
-    texts: list[str] = []
-    originals: list[int] = []
-    for i in range(n):
-        if len(originals) > 10 and rng.random() < 0.15:
-            toks = texts[originals[int(rng.integers(0, len(originals)))]].split()
-            for j in rng.integers(0, len(toks), max(1, len(toks) // 20)):
-                toks[j] = words[rng.integers(0, len(words))]
-            texts.append(" ".join(toks))
-        else:
-            originals.append(i)
-            texts.append(" ".join(words[rng.integers(0, len(words), int(rng.integers(8, 90)))]))
-    return pa.table({
-        "doc_id": np.arange(n, dtype=np.int64),
-        "text": texts,
-        "lang": np.array(LANGS)[rng.integers(0, len(LANGS), n)],
-        "source": [f"src{i % 20}" for i in range(n)],
-        "n_chars": np.array([len(t) for t in texts], dtype=np.int64),
-    })
-
-
-# ---------------------------------------------------------------------------
-# CDC change streams
-# ---------------------------------------------------------------------------
 class _Validity:
     """Collects the version rows of the expected latest-wins state."""
 
@@ -425,9 +295,6 @@ def write_sql(rng, out: str, n_base: int, n_batches: int, batch_rows: int,
 def generate(root: str, workload: str, seed: int, sizes: dict) -> dict:
     """Write one workload's inputs under ``root``; returns their sizes."""
     rng = np.random.default_rng(seed)
-    if workload == "query_mix":
-        write_tables(rng, f"{root}/tables", sizes["sf"])
-        return {"sf": sizes["sf"]}
     if workload == "nosql_upsert":
         return write_nosql(rng, f"{root}/nosql", sizes["keys"], sizes["batches"],
                            sizes["batch_rows"], sizes["reads_per_batch"])
@@ -435,3 +302,8 @@ def generate(root: str, workload: str, seed: int, sizes: dict) -> dict:
         return write_sql(rng, f"{root}/sql", sizes["base_rows"], sizes["batches"],
                          sizes["batch_rows"])
     raise ValueError(f"unknown workload {workload!r}")
+
+
+if __name__ == "__main__":
+    root, workload, seed, sizes = sys.argv[1:]
+    generate(root, workload, int(seed), json.loads(sizes))

@@ -1,11 +1,11 @@
-"""The three benchmark workloads, driving the engine from outside.
+"""The two benchmark workloads, driving the engine from outside.
 
 Every engine call goes through a module attribute (``apply.apply_changes``,
 ``cdf.stream_sync_changes``, ...) so the traced run's wrappers see it.
 Each workload has four steps:
 
 - ``prepare``: fresh state for one set-up (base table load); repeated,
-- ``warmup``: the first commit / drain / pass, which pays JIT and
+- ``warmup``: the first commits and drains, which pay JIT and
   Python-runner start,
 - ``loop``: the closed measurement loop (one client, each step waits for
   the previous one) until the deadline,
@@ -35,24 +35,11 @@ from cdc_from_sql_and_nosql_to_data_warehouse_spark.operators import (
     maintenance,
     reconcile,
 )
-from cdc_from_sql_and_nosql_to_data_warehouse_spark.plans import QUERIES, ORACLES
 from cdc_from_sql_and_nosql_to_data_warehouse_spark.sources import (
     change_feed,
     csv_source,
 )
 from cdc_from_sql_and_nosql_to_data_warehouse_spark.streaming import cdf
-
-QUERY_MIX = [
-    "q3_shipping_priority",
-    "q5_local_supplier_volume",
-    "top3_orders_per_customer",
-    "dedup_minhash_jaccard_pairs",
-    "embedding_pq_full_rerank",
-    "text_unigram_logprob",
-    "multimodal_features",
-]
-# queries in the mix that train and persist an index on their first run
-INDEX_QUERIES = ("embedding_pq_full_rerank",)
 
 
 class Samples:
@@ -320,66 +307,9 @@ class SqlAppendReplica:
                       f"view after batch {self.batch} differs from a full recompute")
 
 
-# ---------------------------------------------------------------------------
-# query_mix
-# ---------------------------------------------------------------------------
-class QueryMix:
-    name = "query_mix"
+WORKLOADS = {w.name: w for w in (NosqlUpsert, SqlAppendReplica)}
 
-    def __init__(self, root: str, sizes: dict):
-        self.tables = f"{root}/tables"
-        self.sizes = sizes
-        self.cold: dict[str, float] = {}
-        self.results: dict = {}
-
-    def prepare(self, spark, work: str) -> None:
-        from cdc_from_sql_and_nosql_to_data_warehouse_spark.config import TESTDATA_TABLES
-        from cdc_from_sql_and_nosql_to_data_warehouse_spark.sources.testdata import load_table
-
-        for t in TESTDATA_TABLES:
-            load_table(spark, self.tables, t).schema
-
-    def _pass(self, spark, tracer) -> dict[str, float]:
-        per_query = {}
-        for q in QUERY_MIX:
-            t0 = time.perf_counter()
-            with tracer.span(f"plans.{q}.build"):
-                df = QUERIES[q](spark, self.tables)
-            with tracer.span(f"plans.{q}.execute"):
-                df.write.format("noop").mode("overwrite").save()
-            per_query[q] = time.perf_counter() - t0
-            self.results[q] = df
-        return per_query
-
-    def warmup(self, spark, tracer, ticks: int) -> None:
-        for _ in range(ticks):
-            self.cold = self._pass(spark, tracer)
-
-    def loop(self, spark, tracer, samples: Samples, deadline: float) -> None:
-        while time.perf_counter() < deadline:
-            per_query = self._pass(spark, tracer)
-            samples.add("query_pass", sum(per_query.values()))
-            for q, dt in per_query.items():
-                samples.add(f"query.{q}", dt)
-                samples.op()
-            samples.bump("rows", self.sizes["pass_rows"])
-
-    def verify(self, spark, tracer, samples: Samples) -> None:
-        """Hash-match the last timed pass's results against the oracles
-        (re-executing each plan, not rebuilding it)."""
-        from cdc_from_sql_and_nosql_to_data_warehouse_spark.plans import oracle_check
-
-        for q, df in self.results.items():
-            if q in ORACLES:
-                got = oracle_check._driver_hash(df.toPandas())
-                want = oracle_check._driver_hash(
-                    oracle_check.run_oracle(ORACLES[q], self.tables))
-                samples.check(got == want, f"{q} differs from its oracle")
-
-
-WORKLOADS = {w.name: w for w in (NosqlUpsert, SqlAppendReplica, QueryMix)}
-
-# the fsio primitives the two CDC workloads reach (rename_dir is not on
+# the fsio primitives the workloads reach (rename_dir is not on
 # their paths, and a wrapper that never fires would read as zero)
 FSIO_OPS = ("makedirs", "create_exclusive", "atomic_write_text", "read_text",
             "remove", "move", "listdir", "remove_tree", "publish_exclusive",

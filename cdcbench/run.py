@@ -1,7 +1,7 @@
 #!/usr/bin/env python3
 """CDC warehouse benchmark: one workload, one seed, one JSON result line.
 
-    python3 cdcbench/run.py --workload nosql_upsert --seed 1 --seconds 15 --trace 0
+    python3 cdcbench/run.py --workload nosql_upsert --seed 1 --seconds 10 --trace 0
 
 Runs from the repository root on ``local[<cpus>]`` with the engine's own
 session factory. Inputs are generated from ``--seed`` before timing
@@ -13,8 +13,8 @@ with ``--trace 0`` the end-to-end metrics of ``BENCHMARK.json``, with
 ``--trace 1`` its per-layer metrics (the loop then runs ``--seconds``
 untraced and ``--seconds`` traced, and the per-span record is kept in
 ``cdcbench/out/``). The line before it names every workload-specific
-figure (commit, read, append, freshness and pass latencies with their
-tails) for a human reader.
+figure (commit, read, append and freshness latencies with their tails)
+for a human reader.
 """
 
 from __future__ import annotations
@@ -24,6 +24,7 @@ import json
 import os
 import shutil
 import statistics
+import subprocess
 import sys
 import tempfile
 import time
@@ -33,15 +34,14 @@ HERE = os.path.dirname(os.path.abspath(__file__))
 REPO = os.path.dirname(HERE)
 
 # input sizes per workload; the CDC pools hold more batches than a run
-# can use, so every run is bounded by time, not by input
+# can use at the capped rates, so every run is bounded by time, not by
+# input
 SIZES = {
     "nosql_upsert": {"keys": 50_000, "batch_rows": 2_000, "reads_per_batch": 2,
-                     "ticks_per_s": 2.5, "warmup": 8},
+                     "ticks_per_s": 2.5, "warmup": 16},
     "sql_append_replica": {"base_rows": 20_000, "batch_rows": 2_500,
-                           "sync_every": 10, "warmup": 2},
-    "query_mix": {"sf": 0.01, "warmup": 1},
+                           "sync_every": 20, "cycles_per_s": 0.3, "warmup": 1},
 }
-SETUPS = 3  # set-ups per run; setup_s takes their median
 # end-to-end latencies: metric -> per workload, the samples it is the
 # median of. A commit is one apply_changes call, batch hand-off to
 # return; "visible" runs from the start of a change batch until a reader
@@ -50,9 +50,8 @@ SETUPS = 3  # set-ups per run; setup_s takes their median
 LATENCIES = {
     "commit_p50_s": {"nosql_upsert": "upsert_commit", "sql_append_replica": "append_commit"},
     "visible_p50_s": {"nosql_upsert": "upsert_visible", "sql_append_replica": "freshness"},
-    "query_pass_s": {"query_mix": "query_pass"},
 }
-WORKLOAD_NAMES = ("nosql_upsert", "sql_append_replica", "query_mix")
+WORKLOAD_NAMES = ("nosql_upsert", "sql_append_replica")
 
 
 def parse_args(argv=None):
@@ -106,7 +105,9 @@ def start_session(root: str, event_log: str | None):
         "spark.driver.memory": "3g",
         "spark.sql.warehouse.dir": f"{root}/spark-warehouse",
         "spark.local.dir": f"{root}/spark-local",
-        "spark.driver.extraJavaOptions": f"-Dderby.system.home={root}/derby",
+        # a fixed young generation: G1's pause-driven young sizing makes
+        # the heap's touched size, and so peak RSS, vary run to run
+        "spark.driver.extraJavaOptions": f"-Xmn384m -Dderby.system.home={root}/derby",
         "spark.ui.showConsoleProgress": "false",
     }
     if event_log:
@@ -118,9 +119,9 @@ def start_session(root: str, event_log: str | None):
                      shuffle_partitions=cpus, extra_conf=conf)
 
 
-def layer_metrics(tracer, samples_traced, detail: dict, workload: str) -> dict[str, float]:
+def layer_metrics(tracer, samples_traced, detail: dict) -> dict[str, float]:
     """Per-layer figures of a traced run, by ``BENCHMARK.json`` name."""
-    from bench_workloads import FSIO_OPS, QUERY_MIX
+    from bench_workloads import FSIO_OPS
 
     spans = tracer.summary()
     out: dict[str, float] = {}
@@ -155,16 +156,8 @@ def layer_metrics(tracer, samples_traced, detail: dict, workload: str) -> dict[s
         out[f"{name}.calls"] = tracer.calls.get(name, 0)
     for k in ("log_batches_pruned", "versions_retained", "uncommitted_removed"):
         out[f"maintenance.{k}"] = samples_traced.counts.get(k, 0)
-    for q in QUERY_MIX if workload == "query_mix" else ():
-        b, e = span(f"plans.{q}.build"), span(f"plans.{q}.execute")
-        out[f"plans.{q}.build_s"] = b.get("s", 0.0)
-        out[f"plans.{q}.execute_s"] = e.get("s", 0.0)
-        out[f"plans.{q}.build_jobs"] = b.get("jobs", 0)
-        out[f"plans.{q}.execute_jobs"] = e.get("jobs", 0)
     for k in ("session_s", "load_s", "warmup_s"):
         out[f"setup.{k}"] = detail[f"setup.{k}"]
-    if workload == "query_mix":
-        out["setup.index_build_s"] = detail["setup.index_build_s"]
     out["trace.untraced_p50_s"] = detail["untraced_p50_s"]
     out["trace.traced_p50_s"] = detail["traced_p50_s"]
     if detail["traced_p50_s"] and detail["untraced_p50_s"]:
@@ -203,47 +196,41 @@ def run(workload: str, seed: int, seconds: float, trace: bool,
         sizes: dict | None = None) -> dict:
     """One benchmark run; returns the result object plus the tracer."""
     sys.path.insert(0, REPO)
-    import bench_gen
     import bench_workloads as bw
     from bench_trace import NullTracer, Tracer
 
     sizes = dict(sizes or SIZES[workload])
     loops = 2 if trace else 1
-    if workload == "nosql_upsert":  # warm-up ticks, then ticks up to a rate cap
+    # the input pools: warm-up, then up to a rate cap per loop second
+    if workload == "nosql_upsert":
         sizes["batches"] = sizes["warmup"] + int(sizes["ticks_per_s"] * seconds * loops) + 4
-    elif workload == "sql_append_replica":  # warm-up cycles, then <= 3 cycles a loop
-        sizes["batches"] = sizes["sync_every"] * (sizes["warmup"] + 3 * loops)
+    else:
+        cycles = sizes["warmup"] + int(sizes["cycles_per_s"] * seconds * loops) + 1
+        sizes["batches"] = sizes["sync_every"] * cycles
     root = os.path.join(HERE, "_run", f"{os.getpid()}-{time.time_ns()}")
     os.makedirs(root)
     spark = None
     try:
         isolate(root)
-        bench_gen.generate(root, workload, seed, sizes)
-        if workload == "query_mix":
-            sizes["pass_rows"] = sum(bench_gen.rows_at(sizes["sf"], t)
-                                     for t in bench_gen.BASE_ROWS)
+        # a child process, so that its memory stays out of peak_rss_mb
+        subprocess.run([sys.executable, os.path.join(HERE, "bench_gen.py"), root,
+                        workload, str(seed), json.dumps(sizes)], check=True)
         wl = bw.WORKLOADS[workload](root, sizes)
         event_log = f"{root}/events" if trace else None
         if event_log:
             os.makedirs(event_log)
         null = NullTracer()
 
-        setups = []
-        for i in range(SETUPS):
-            t0 = time.perf_counter()
-            spark = start_session(root, event_log)
-            t1 = time.perf_counter()
-            wl.prepare(spark, f"{root}/work{i}")
-            setups.append((t1 - t0, time.perf_counter() - t1))
-            if i < SETUPS - 1:
-                spark.stop()
-                shutil.rmtree(f"{root}/work{i}", ignore_errors=True)
+        # one cold set-up: a fresh JVM, class loading, the base load and
+        # the warm-up commits/drains that pay JIT and worker start
         t0 = time.perf_counter()
+        spark = start_session(root, event_log)
+        t1 = time.perf_counter()
+        wl.prepare(spark, f"{root}/work")
+        t2 = time.perf_counter()
         wl.warmup(spark, null, sizes["warmup"])
-        warm_s = time.perf_counter() - t0
-        session_s = median([s for s, _ in setups])
-        load_s = median([l for _, l in setups])
-        index_s = sum(getattr(wl, "cold", {}).get(q, 0.0) for q in bw.INDEX_QUERIES)
+        setup = {"setup.session_s": t1 - t0, "setup.load_s": t2 - t1,
+                 "setup.warmup_s": time.perf_counter() - t2}
 
         samples = bw.Samples()
         t0 = time.perf_counter()
@@ -275,19 +262,16 @@ def run(workload: str, seed: int, seconds: float, trace: bool,
         primary = next(iter(latencies.values()))
         detail = {
             "workload": workload, "seed": seed,
-            "setup.session_s": session_s, "setup.load_s": load_s,
-            "setup.warmup_s": warm_s, "setup.index_build_s": index_s,
+            **setup,
             "loop_s": loop_s, "rows": samples.counts.get("rows", 0),
         }
         for name, xs in sorted(samples.lat.items()):
-            if name.startswith("query."):
-                continue
             detail[f"{name}_p50_s"] = median(xs)
             t = tail(xs)
             detail[f"{name}_tail_s"] = t and {"value": t[0], "pct": t[1], "samples": t[2]}
             detail[f"{name}_samples"] = [round(x, 4) for x in xs]
         end_to_end = {
-            "setup_s": (median([s + l for s, l in setups]) + warm_s, "s"),
+            "setup_s": (sum(setup.values()), "s"),
             **{m: (median(samples.lat.get(name, [])), "s") for m, name in latencies.items()},
             "rows_per_s": (samples.counts.get("rows", 0) / loop_s, "rows/s"),
             "peak_rss_mb": (rss, "MB"),
@@ -302,7 +286,7 @@ def run(workload: str, seed: int, seconds: float, trace: bool,
             failed += traced.failed
             failures = failures + traced.failures
             tracer.attach_event_logs(event_log)
-            layers = layer_metrics(tracer, traced, detail, workload)
+            layers = layer_metrics(tracer, traced, detail)
             os.makedirs(f"{HERE}/out", exist_ok=True)
             tracer.write(f"{HERE}/out/trace-{workload}-{seed}.json",
                          {"layers": layers, "summary": tracer.summary(), "detail": detail})

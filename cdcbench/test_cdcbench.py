@@ -11,6 +11,8 @@ import filecmp
 import json
 import os
 import re
+import subprocess
+import sys
 
 import pytest
 
@@ -24,15 +26,12 @@ UNIT = re.compile(r"[A-Za-z0-9_/%.-]{1,16}\Z")
 TINY = {
     "nosql_upsert": {"keys": 2_000, "batch_rows": 200, "reads_per_batch": 2,
                      "ticks_per_s": 2.0, "warmup": 1},
-    # 2 cycles of 5 appends cross a fileset-log compaction (and its prune)
+    # a warm-up cycle and 2 timed cycles of 5 appends cross a fileset-log
+    # compaction (and its prune)
     "sql_append_replica": {"base_rows": 1_000, "batch_rows": 200,
-                           "sync_every": 5, "warmup": 1},
+                           "sync_every": 5, "cycles_per_s": 1.0, "warmup": 1},
 }
-GEN_TINY = {
-    "nosql_upsert": {**TINY["nosql_upsert"], "batches": 3},
-    "sql_append_replica": {**TINY["sql_append_replica"], "batches": 3},
-    "query_mix": {"sf": 0.002},
-}
+GEN_TINY = {name: {**sizes, "batches": 3} for name, sizes in TINY.items()}
 
 
 def _same_tree(a: str, b: str) -> bool:
@@ -46,8 +45,12 @@ def _same_tree(a: str, b: str) -> bool:
 
 @pytest.mark.parametrize("workload", sorted(GEN_TINY))
 def test_generator_is_deterministic(tmp_path, workload):
-    for name, seed in (("a", 7), ("b", 7), ("c", 8)):
-        bench_gen.generate(str(tmp_path / name), workload, seed, GEN_TINY[workload])
+    """Same seed, same bytes, also through the command line a run uses."""
+    sizes = GEN_TINY[workload]
+    bench_gen.generate(str(tmp_path / "a"), workload, 7, sizes)
+    subprocess.run([sys.executable, bench_gen.__file__, str(tmp_path / "b"),
+                    workload, "7", json.dumps(sizes)], check=True)
+    bench_gen.generate(str(tmp_path / "c"), workload, 8, sizes)
     assert _same_tree(str(tmp_path / "a"), str(tmp_path / "b"))
     assert not _same_tree(str(tmp_path / "a"), str(tmp_path / "c"))
 
