@@ -283,7 +283,7 @@ class SqlAppendReplica:
 
     def warmup(self, spark, tracer, cycles: int) -> None:
         for _ in range(cycles):
-            self._cycle(spark, tracer, None, self.sizes["sync_every"])
+            self._cycle(spark, tracer, None, self.sizes["warmup_appends"])
 
     def loop(self, spark, tracer, samples: Samples, deadline: float) -> None:
         # whole cycles only, so rows per second always carries its syncs

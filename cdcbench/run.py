@@ -1,7 +1,7 @@
 #!/usr/bin/env python3
 """CDC warehouse benchmark: one workload, one seed, one JSON result line.
 
-    python3 cdcbench/run.py --workload nosql_upsert --seed 1 --seconds 10 --trace 0
+    python3 cdcbench/run.py --workload nosql_upsert --seed 1 --seconds 15 --trace 0
 
 Runs from the repository root on ``local[<cpus>]`` with the engine's own
 session factory. Inputs are generated from ``--seed`` before timing
@@ -34,13 +34,16 @@ HERE = os.path.dirname(os.path.abspath(__file__))
 REPO = os.path.dirname(HERE)
 
 # input sizes per workload; the CDC pools hold more batches than a run
-# can use at the capped rates, so every run is bounded by time, not by
-# input
+# can use at the capped rates (a SQL cycle of 60 appends takes about 30 s
+# on a 4-core host, the cap allows one per 20 s), so every run is bounded
+# by time, not by input. The SQL warm-up cycle is short (10 appends):
+# enough to pay the session's first-drain costs at less set-up time.
 SIZES = {
     "nosql_upsert": {"keys": 50_000, "batch_rows": 2_000, "reads_per_batch": 2,
                      "ticks_per_s": 2.5, "warmup": 16},
     "sql_append_replica": {"base_rows": 20_000, "batch_rows": 2_500,
-                           "sync_every": 20, "cycles_per_s": 0.3, "warmup": 1},
+                           "sync_every": 60, "cycles_per_s": 0.05, "warmup": 1,
+                           "warmup_appends": 10},
 }
 # end-to-end latencies: metric -> per workload, the samples it is the
 # median of. A commit is one apply_changes call, batch hand-off to
@@ -105,9 +108,11 @@ def start_session(root: str, event_log: str | None):
         "spark.driver.memory": "3g",
         "spark.sql.warehouse.dir": f"{root}/spark-warehouse",
         "spark.local.dir": f"{root}/spark-local",
-        # a fixed young generation: G1's pause-driven young sizing makes
-        # the heap's touched size, and so peak RSS, vary run to run
-        "spark.driver.extraJavaOptions": f"-Xmn384m -Dderby.system.home={root}/derby",
+        # a fixed heap and young generation: G1's pause-driven heap and
+        # young sizing makes the heap's touched size, and so peak RSS,
+        # vary run to run with the host's speed
+        "spark.driver.extraJavaOptions":
+            f"-Xms3g -Xmn384m -Dderby.system.home={root}/derby",
         "spark.ui.showConsoleProgress": "false",
     }
     if event_log:
@@ -201,12 +206,17 @@ def run(workload: str, seed: int, seconds: float, trace: bool,
 
     sizes = dict(sizes or SIZES[workload])
     loops = 2 if trace else 1
+    if trace and "sync_every" in sizes:
+        # a traced run makes two loops of whole cycles; half-length
+        # cycles keep it within the time one run may take
+        sizes["sync_every"] //= 2
     # the input pools: warm-up, then up to a rate cap per loop second
     if workload == "nosql_upsert":
         sizes["batches"] = sizes["warmup"] + int(sizes["ticks_per_s"] * seconds * loops) + 4
     else:
-        cycles = sizes["warmup"] + int(sizes["cycles_per_s"] * seconds * loops) + 1
-        sizes["batches"] = sizes["sync_every"] * cycles
+        cycles = int(sizes["cycles_per_s"] * seconds * loops) + 1
+        sizes["batches"] = (sizes["warmup"] * sizes["warmup_appends"]
+                            + sizes["sync_every"] * cycles)
     root = os.path.join(HERE, "_run", f"{os.getpid()}-{time.time_ns()}")
     os.makedirs(root)
     spark = None

@@ -26,10 +26,11 @@ UNIT = re.compile(r"[A-Za-z0-9_/%.-]{1,16}\Z")
 TINY = {
     "nosql_upsert": {"keys": 2_000, "batch_rows": 200, "reads_per_batch": 2,
                      "ticks_per_s": 2.0, "warmup": 1},
-    # a warm-up cycle and 2 timed cycles of 5 appends cross a fileset-log
-    # compaction (and its prune)
+    # a warm-up cycle and 2 timed cycles of 5 appends (a traced run
+    # halves sync_every) cross a fileset-log compaction (and its prune)
     "sql_append_replica": {"base_rows": 1_000, "batch_rows": 200,
-                           "sync_every": 5, "cycles_per_s": 1.0, "warmup": 1},
+                           "sync_every": 10, "cycles_per_s": 1.0, "warmup": 1,
+                           "warmup_appends": 5},
 }
 GEN_TINY = {name: {**sizes, "batches": 3} for name, sizes in TINY.items()}
 
